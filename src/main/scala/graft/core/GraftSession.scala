@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.SparkSession
+import graft.streaming.LocalCheckpointFileManager
 
 /** Session factory for the graft engine.
   *
@@ -8,6 +9,17 @@ import org.apache.spark.sql.SparkSession
   * 32 shuffle partitions); on a real cluster the same builder is used
   * with `master` unset and shuffle partitions sized to ~2-3x total
   * cores (or left to AQE coalescing, which is enabled here).
+  *
+  * [[configure]] also registers [[LocalCheckpointFileManager]] as the
+  * streaming checkpoint file manager. Each micro-batch of a stateful
+  * stream commits several small files (offset log, commit log, one
+  * state delta per partition); through Spark's default manager every
+  * one of them on a `file:` path cost two to four forked processes
+  * (`readlink` per rename, `chmod` per create), which set the
+  * per-batch floor of the streaming programs. The registered manager
+  * writes the same files, checksums and modes without forking. Paths
+  * on any other scheme (HDFS, object stores) get exactly the manager
+  * Spark would have chosen, so their behavior is unchanged.
   */
 object GraftSession {
 
@@ -45,6 +57,10 @@ object GraftSession {
     // Env-overridable for cluster deployments that want the default.
     c.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
       sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "128k"))
+    // fork-free streaming checkpoint commits on `file:` paths; other
+    // schemes keep Spark's default manager (see the object scaladoc)
+    c.set(LocalCheckpointFileManager.ConfKey,
+      classOf[LocalCheckpointFileManager].getName)
     spark
   }
 

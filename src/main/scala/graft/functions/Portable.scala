@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Engine-portable building blocks: every helper here has a documented
   * bit-identical DuckDB spelling, so operators built from them can be
@@ -46,14 +47,10 @@ object Portable {
     trim(regexp_replace(lower(c), "\\s+", " "))
 
   /** Scala-side twin of [[hash60]] for driver/executor code that
-    * scores against collected models (streaming serve paths): same
-    * md5-prefix value as the Column expression, bit for bit. */
-  def h60Scala(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    java.lang.Long.parseLong(
-      d.take(8).map(b => f"${b & 0xff}%02x").mkString.take(15), 16)
-  }
+    * scores against collected models (streaming serve paths): the
+    * Column expression's own kernel, so the same value bit for bit. */
+  def h60Scala(s: String): Long =
+    Md5PrefixLong.prefix(UTF8String.fromString(s), 15)
 
   /** Scala-side twin of [[words]] (lowercase, whitespace-normalize,
     * split on single spaces — `split("", " ")` is `[""]`, matching the
@@ -63,7 +60,7 @@ object Portable {
     * JVMs with a non-default locale (Locale.ROOT would diverge from
     * Spark on e.g. a Turkish-locale JVM's dotted I). */
   def wordsScala(text: String): Array[String] =
-    org.apache.spark.unsafe.types.UTF8String.fromString(text)
+    UTF8String.fromString(text)
       .toLowerCase.toString
       .replaceAll("\\s+", " ").trim.split(" ", -1)
 

@@ -56,11 +56,9 @@ object Dedup extends graft.QueryModule {
   /** Affine hash-family coefficients, derived from md5 so the oracle
     * can inline the identical literals. a ∈ [1, 2^30), b ∈ [0, p):
     * a·h32 + b < 2^62 — no 64-bit overflow on either engine. */
-  private[operators] def h32Scala(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    java.lang.Long.parseLong(d.take(4).map(b => f"${b & 0xff}%02x").mkString, 16)
-  }
+  private[graft] def h32Scala(s: String): Long =
+    graft.functions.Md5PrefixLong.prefix(
+      org.apache.spark.unsafe.types.UTF8String.fromString(s), 8)
   private[operators] val coefA: Array[Long] =
     Array.tabulate(16)(i => h32Scala(s"a$i") % 1073741789L + 1)
   private[operators] val coefB: Array[Long] =

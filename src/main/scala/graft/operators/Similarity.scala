@@ -220,12 +220,9 @@ object Similarity extends graft.QueryModule {
     * md5("p<plane>_<dim>") → 32-bit int → scaled. Same formula is
     * inlined into the oracle SQL as literals.
     */
-  private def h32Scala(s: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-      .take(4).map(b => f"${b & 0xff}%02x").mkString
-    java.lang.Long.parseLong(hex, 16)
-  }
+  private[graft] def h32Scala(s: String): Long =
+    graft.functions.Md5PrefixLong.prefix(
+      org.apache.spark.unsafe.types.UTF8String.fromString(s), 8)
 
   lazy val planes: Array[Array[Double]] =
     Array.tabulate(nPlanes, dims)((p, i) =>

@@ -480,7 +480,8 @@ object TextOps extends graft.QueryModule {
     * shape the streaming gate serves from) and the gram-explode +
     * index-join formulation, with identical rows (parity-spec'd).
     * DEFAULT (round 14): fused while the benchmark side sits under
-    * the broadcast-source gate, join past it — past broadcast scale
+    * the broadcast-source gate and `broadcastIndex` is not
+    * `Some(false)`, join otherwise — past broadcast scale
     * the index cannot freeze on the driver, so the join path is the
     * scale fallback either way. History: the round-8 A/B (ProfileOps
     * q125ab) measured the fused path 0.5-0.6 s SLOWER per run and it
@@ -497,7 +498,9 @@ object TextOps extends graft.QueryModule {
     val small =
       benchDocs.queryExecution.optimizedPlan.stats.sizeInBytes <=
         Dedup.MaxBroadcastSourceBytes
-    if (fusedProbe.getOrElse(small)) {
+    // broadcastIndex = Some(false) keeps the index off the driver, and
+    // the fused probe collects it there, so it also picks the join path
+    if (fusedProbe.getOrElse(small && broadcastIndex.forall(identity))) {
       // FUSED probe (default under the gate; see the scaladoc):
       // freeze the benchmark grams as a sorted h60 array
       // (fitContamIndex — the exact structure the streaming gate
@@ -589,7 +592,7 @@ object TextOps extends graft.QueryModule {
     val small = documents.filter(col("source") === benchSource)
       .queryExecution.optimizedPlan.stats.sizeInBytes <=
       Dedup.MaxBroadcastSourceBytes
-    if (fusedProbe.getOrElse(small)) {
+    if (fusedProbe.getOrElse(small && broadcastIndex.forall(identity))) {
       val idx = fitContamIndex(documents, benchSource, n)
       val out = Seq(col("doc_id"), col("lang"), col("source"),
         col("n_chars"))
@@ -1259,17 +1262,28 @@ object TextOps extends graft.QueryModule {
     val wf0 = bpeInitState(documents)
     // size gate in ONE job: limit(cap+1) — if fewer rows come back,
     // those are ALL the rows, collected without a separate count pass
-    val probe =
-      if (maxDriverVocab <= 0) Array.empty[org.apache.spark.sql.Row]
-      else wf0.limit(maxDriverVocab.toInt + 1).collect()
-    if (maxDriverVocab > 0 && probe.length <= maxDriverVocab) {
-      val (out, state) = bpeLoopLocal(
-        probe.map(r => (r.getString(0), r.getString(1), r.getLong(2))),
-        merges)
-      import spark.implicits._
-      (out, spark.createDataset(state.toSeq).toDF("word", "ps", "freq"))
-    } else bpeLoopDistributed(wf0, merges, checkpointDir.isDefined)
+    val localVocab = vocabProbeLimit(maxDriverVocab).flatMap { lim =>
+      val probe = wf0.limit(lim).collect()
+      if (probe.length < lim) Some(probe) else None
+    }
+    localVocab match {
+      case Some(probe) =>
+        val (out, state) = bpeLoopLocal(
+          probe.map(r => (r.getString(0), r.getString(1), r.getLong(2))),
+          merges)
+        import spark.implicits._
+        (out, spark.createDataset(state.toSeq).toDF("word", "ps", "freq"))
+      case None => bpeLoopDistributed(wf0, merges, checkpointDir.isDefined)
+    }
   }
+
+  /** Row limit of [[bpeLoop]]'s driver-vocab probe (cap + 1), or None
+    * for the distributed loop: a cap ≤ 0 turns the driver path off,
+    * and a cap ≥ Int.MaxValue has no Int `limit` (cap + 1 overflows to
+    * a negative limit) — no driver holds that many vocab rows anyway. */
+  private[graft] def vocabProbeLimit(maxDriverVocab: Long): Option[Int] =
+    if (maxDriverVocab <= 0 || maxDriverVocab >= Int.MaxValue) None
+    else Some(maxDriverVocab.toInt + 1)
 
   /** All `merges` BPE rounds over a driver-local vocab. */
   private def bpeLoopLocal(vocab0: Array[(String, String, Long)],

@@ -44,21 +44,11 @@ object ProfileStream {
     val b = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-    if (rocksdb) {
+    if (rocksdb)
       b.config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // 4.1's checksummed checkpoint files cost real throughput under
-      // RocksDB (measured round 8: fraud 43 -> 35, twsfraud 29 -> 18
-      // krows/s — every snapshot-zip close waits on its checksum
-      // future, jstack shows all 32 executor threads parked in
-      // ChecksumCancellableFSDataOutputStream.close). Off by default
-      // so the sweep measures the operators, not the durability
-      // audit; pass --checksum to re-measure with them on.
-      if (!args.contains("--checksum"))
-        b.config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-          "false")
-    }
-    val spark = b.getOrCreate()
+    // the engine's session confs, its checkpoint file manager included
+    val spark = graft.core.GraftSession.configure(b.getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

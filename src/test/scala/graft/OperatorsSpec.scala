@@ -451,6 +451,43 @@ class OperatorsSpec extends SparkSpec {
       s"fused decontaminate should be map-only:\n$plan")
   }
 
+  test("broadcastIndex = Some(false) keeps contamination off the fused probe") {
+    import spark.implicits._
+    // the fused probe collects the benchmark index onto the driver, so
+    // an explicit no-broadcast request must pick the join path by default
+    val d = Seq((1L, "one two three four five six", "en", "src0", 30L),
+      (2L, "one two three four five x", "en", "srcA", 30L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    def fused(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.toString.toLowerCase
+        .contains("gramsetsharedcount")
+    assert(fused(TextOps.contamination(d)))
+    assert(fused(TextOps.decontaminate(d)))
+    assert(!fused(TextOps.contamination(d, broadcastIndex = Some(false))))
+    assert(!fused(TextOps.decontaminate(d, broadcastIndex = Some(false))))
+    assert(fused(TextOps.contamination(d, broadcastIndex = Some(false),
+      fusedProbe = Some(true))))
+    assert(TextOps.contamination(d, broadcastIndex = Some(false))
+      .select("doc_id", "n_shared").as[(Long, Long)].collect().toSeq ==
+      Seq((2L, 1L)))
+  }
+
+  test("fused hash and shingle nodes reject mistyped children at analysis") {
+    import org.apache.spark.sql.AnalysisException
+    import graft.functions.HashExpressions.{md5Prefix, wordShingles}
+    val ids = spark.range(3).toDF("id")
+    intercept[AnalysisException](ids.select(md5Prefix(col("id"), 15)))
+    intercept[AnalysisException](
+      ids.select(wordShingles(array(col("id"), col("id")), 2)))
+    intercept[AnalysisException](ids.select(wordShingles(col("id"), 2)))
+    // string and array<string> children still resolve and run
+    assert(ids.select(md5Prefix(col("id").cast("string"), 15))
+      .collect().length == 3)
+    assert(ids.select(wordShingles(array(col("id").cast("string"),
+      lit("x")), 2)).collect().map(_.getSeq[String](0)).toSeq ==
+      Seq(Seq("0 x"), Seq("1 x"), Seq("2 x")))
+  }
+
   test("unigram-LM tokenizer equals an all-segmentations brute force") {
     import spark.implicits._
     // "abab" floods the corpus so pieces "ab"/"abab" clear minCount;
@@ -577,6 +614,21 @@ class OperatorsSpec extends SparkSpec {
     val encDist = TextOps.bpeEncode(docs, merges = 4, maxDriverVocab = 0)
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(encLocal == encDist, s"encode paths diverge:\n$encLocal\n$encDist")
+  }
+
+  test("BPE driver-vocab cap at or past Int.MaxValue takes the distributed path") {
+    import spark.implicits._
+    assert(TextOps.vocabProbeLimit(1000000L) == Some(1000001))
+    assert(TextOps.vocabProbeLimit(Int.MaxValue - 1L) == Some(Int.MaxValue))
+    for (cap <- Seq(Int.MaxValue.toLong, Long.MaxValue, 0L, -1L))
+      assert(TextOps.vocabProbeLimit(cap).isEmpty, cap)
+    // a cap whose cap + 1 overflows Int no longer reaches limit()
+    val docs = Seq((1L, "aaaa aaab abab ab"), (2L, "abab cdcd cd"))
+      .toDF("doc_id", "text")
+    def train(cap: Long) = TextOps.bpeTrain(docs, merges = 3,
+      maxDriverVocab = cap).as[(Int, String, String, String, Long)]
+      .collect().sortBy(_._1).toSeq
+    assert(train(Int.MaxValue.toLong) == train(1000L))
   }
 
   test("BPE encode: learned merges tokenize the corpus, fallback = 1 token") {

@@ -366,15 +366,20 @@ object GraftProperties extends Properties("graft") {
     }
   }
 
+  /** The md5 hex-prefix value spelled the way the oracle SQL spells it
+    * — hex-encode the digest, keep `nibbles` characters, parse base 16
+    * — sharing no code with Md5PrefixLong's byte fold: the independent
+    * reference every hash twin is pinned to. */
+  private def hexPrefix(s: String, nibbles: Int): Long = {
+    val d = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8"))
+    java.lang.Long.parseLong(
+      d.take(8).map(b => f"${b & 0xff}%02x").mkString.take(nibbles), 16)
+  }
+
   property("Md5PrefixLong CODEGEN == interpreted == hex-parse spelling") = {
     import org.apache.spark.sql.types.StringType
     import org.apache.spark.unsafe.types.UTF8String
-    def hexPrefix(s: String, nibbles: Int): Long = {
-      val d = java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8"))
-      java.lang.Long.parseLong(
-        d.take(8).map(b => f"${b & 0xff}%02x").mkString.take(nibbles), 16)
-    }
     val exprs = Seq(8, 15).map(n => n -> graft.functions.Md5PrefixLong(
       BoundReference(0, StringType, nullable = true), n))
     val projs = exprs.map { case (n, e) =>
@@ -396,6 +401,28 @@ object GraftProperties extends Properties("graft") {
           (n != 15 || gen == graft.functions.Portable.h60Scala(s))
       }
     }
+  }
+
+  property("Scala hash twins == hex-prefix reference on 1,200 strings") = {
+    // the production key shapes (plane/coefficient seeds) plus seeded
+    // random strings over ASCII, accented, CJK and astral code points
+    val rnd = new scala.util.Random(1200)
+    val codePoints = Vector[Int](' ', '|', '_', 'a', 'z', 'A', '0', '9', 'é',
+      'ü', 'ß', 'İ', 'ı', '日', '本', 'グ', 0x1F600, 0x10348)
+    val random = Seq.fill(1000) {
+      val cps = Array.fill(rnd.nextInt(24))(codePoints(rnd.nextInt(codePoints.size)))
+      new String(cps, 0, cps.length)
+    }
+    val shaped = (0 until 50).flatMap(i =>
+      Seq(s"p${i % 16}_$i", s"rp${i % 8}_$i", s"a$i", s"b$i"))
+    val inputs = random ++ shaped
+    val bad = inputs.filterNot { s =>
+      graft.functions.Portable.h60Scala(s) == hexPrefix(s, 15) &&
+        graft.operators.Dedup.h32Scala(s) == hexPrefix(s, 8) &&
+        graft.operators.Similarity.h32Scala(s) == hexPrefix(s, 8)
+    }
+    Prop(inputs.size == 1200 && bad.isEmpty) :|
+      s"${bad.size} mismatches, e.g. ${bad.take(3)}"
   }
 
   property("md5 prefix identity: hash32(s) == hash60(s) >>> 28") = {
