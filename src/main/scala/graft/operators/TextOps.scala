@@ -1262,19 +1262,16 @@ object TextOps extends graft.QueryModule {
     val wf0 = bpeInitState(documents)
     // size gate in ONE job: limit(cap+1) — if fewer rows come back,
     // those are ALL the rows, collected without a separate count pass
-    val localVocab = vocabProbeLimit(maxDriverVocab).flatMap { lim =>
-      val probe = wf0.limit(lim).collect()
-      if (probe.length < lim) Some(probe) else None
-    }
-    localVocab match {
-      case Some(probe) =>
-        val (out, state) = bpeLoopLocal(
-          probe.map(r => (r.getString(0), r.getString(1), r.getLong(2))),
-          merges)
-        import spark.implicits._
-        (out, spark.createDataset(state.toSeq).toDF("word", "ps", "freq"))
-      case None => bpeLoopDistributed(wf0, merges, checkpointDir.isDefined)
-    }
+    val probeLimit = vocabProbeLimit(maxDriverVocab)
+    val probe = probeLimit.fold(Array.empty[org.apache.spark.sql.Row])(
+      wf0.limit(_).collect())
+    if (probeLimit.exists(probe.length < _)) {
+      val (out, state) = bpeLoopLocal(
+        probe.map(r => (r.getString(0), r.getString(1), r.getLong(2))),
+        merges)
+      import spark.implicits._
+      (out, spark.createDataset(state.toSeq).toDF("word", "ps", "freq"))
+    } else bpeLoopDistributed(wf0, merges, checkpointDir.isDefined)
   }
 
   /** Row limit of [[bpeLoop]]'s driver-vocab probe (cap + 1), or None

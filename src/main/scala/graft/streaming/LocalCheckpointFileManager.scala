@@ -61,7 +61,6 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
   override def open(p: Path): FSDataInputStream = underlying.open(p)
   override def list(p: Path, filter: PathFilter): Array[FileStatus] =
     underlying.list(p, filter)
-  override def list(p: Path): Array[FileStatus] = underlying.list(p)
   override def mkdirs(p: Path): Unit = underlying.mkdirs(p)
   override def exists(p: Path): Boolean = underlying.exists(p)
   override def delete(p: Path): Unit = underlying.delete(p)

@@ -191,12 +191,12 @@ class CheckpointSpec extends SparkSpec {
     // FileSystem-based manager over the scheme's own FileSystem
     val fsBased = new LocalCheckpointFileManager(path, conf)
     assert(fsBased.underlying.isInstanceOf[FileSystemBasedCheckpointFileManager])
-    val before = MockSchemeFileSystem.renames.get()
+    val before = mockRenames.get()
     val s = fsBased.createAtomic(new Path(path, "x"), overwriteIfPossible = false)
     s.write(1)
     s.close()
     // committed through the scheme's own filesystem
-    assert(MockSchemeFileSystem.renames.get() > before)
+    assert(mockRenames.get() > before)
     assert(Files.exists(dir.resolve("ckpt/x")))
 
     // with one registered, Spark's first choice: the FileContext one
@@ -215,24 +215,22 @@ object CheckpointSpec {
 
   def causes(t: Throwable): Iterator[Throwable] =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(50)
-}
 
-/** A non-`file` scheme over the local disk (raw, no checksums) that
-  * counts its renames. */
-class MockSchemeFileSystem extends RawLocalFileSystem {
-  override def getUri: URI = URI.create(s"${CheckpointSpec.MockScheme}:///")
-  override def getScheme: String = CheckpointSpec.MockScheme
-  override def rename(src: Path, dst: Path): Boolean = {
-    MockSchemeFileSystem.renames.incrementAndGet()
-    super.rename(src, dst)
+  /** A non-`file` scheme over the local disk (raw, no checksums) that
+    * counts its renames. */
+  class MockSchemeFileSystem extends RawLocalFileSystem {
+    override def getUri: URI = URI.create(s"$MockScheme:///")
+    override def getScheme: String = MockScheme
+    override def rename(src: Path, dst: Path): Boolean = {
+      mockRenames.incrementAndGet()
+      super.rename(src, dst)
+    }
   }
-}
 
-object MockSchemeFileSystem {
-  val renames = new java.util.concurrent.atomic.AtomicInteger
-}
+  val mockRenames = new java.util.concurrent.atomic.AtomicInteger
 
-/** The same scheme as a FileContext filesystem. */
-class MockSchemeFs(uri: URI, conf: Configuration)
-    extends DelegateToFileSystem(uri, new MockSchemeFileSystem, conf,
-      CheckpointSpec.MockScheme, false)
+  /** The same scheme as a FileContext filesystem. */
+  class MockSchemeFs(uri: URI, conf: Configuration)
+      extends DelegateToFileSystem(uri, new MockSchemeFileSystem, conf,
+        MockScheme, false)
+}
