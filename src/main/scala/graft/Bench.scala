@@ -1,6 +1,32 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
+
+  /** The queries of a run that threw. A failed query is still timed
+    * (its time is meaningless), so the JSON line names it in its
+    * `"failed"` field and stderr carries the exception: a crash must
+    * not read as a fast success. */
+  private[graft] final class Failures {
+    private val keys = scala.collection.mutable.LinkedHashSet.empty[String]
+
+    /** Runs `body`; a non-fatal exception is recorded against query
+      * `name` (printed once per query) instead of thrown. */
+    def attempt(name: String)(body: => Unit): Unit =
+      try body
+      catch { case NonFatal(e) =>
+        if (keys.add(key(name))) {
+          System.err.println(s"[bench] $name failed: $e")
+          e.printStackTrace()
+        }
+      }
+
+    /** The JSON line's field, with its leading comma. */
+    def field: String = keys.map("\"" + _ + "\"").mkString(",\"failed\":[", ",", "]")
+  }
+
+  /** A query's key in the JSON line: its `qNN` prefix. */
+  private[graft] def key(name: String): String = name.takeWhile(_ != '_')
 
   /** `Bench compare old.json new.json` — the operational form of the
     * round-7 drift finding (BENCHDRIFT.md): this box's effective
@@ -94,11 +120,10 @@ object Bench {
       compare(args(1), args(2)); return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = graft.core.GraftSession.defaultCpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -128,7 +153,7 @@ object Bench {
         Tables.documents, Tables.embeddings)
       loaders.foreach { l =>
         try { l(spark, sfDir).count(); () }
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
       }
     }
     // Calibration anchor: a fixed, data-independent, codegen-only
@@ -198,15 +223,16 @@ object Bench {
     val only = args.toSet
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
+    val failures = new Failures
     val results = selected.map { case (name, fn) =>
       // The timed action is a noop-sink write, not count(): count()
       // lets Catalyst prune unreferenced projection expressions, so
       // map-only queries (q21-q24, q40, q44, q46...) would time the
       // scan instead of their regex/hash work. The noop sink consumes
       // every row with all columns materialized.
-      def run(): Unit =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        catch { case _: Throwable => () }
+      def run(): Unit = failures.attempt(name) {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      }
       // Untimed warm run first: the first execution of a plan pays
       // Janino whole-stage-codegen compile + JIT of the generated
       // classes — measured at 2.2s of q20's 2.7s cold run vs 0.45s
@@ -253,19 +279,20 @@ object Bench {
     def cs(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val total = results.map(_._2).sum
-    val a2Field = anchor2.map(v => s""","anchor2":${cs(v)}""").getOrElse("")
+    val fields = anchor2.map(v => s""","anchor2":${cs(v)}""").getOrElse("") +
+      failures.field
     def line(prec: Double => String): String = {
       val qs = results.map { case (k, v) =>
-        "\"" + k.takeWhile(_ != '_') + "\":" + prec(v)
+        "\"" + key(k) + "\":" + prec(v)
       }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","anchor":${cs(anchor)}$a2Field,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","anchor":${cs(anchor)}$fields,"queries":$qs,"sf":"$sfDir"}"""
     }
     // degrade per-query precision before ever risking the window; the
     // headline total keeps ms precision in every shape
     val out = Seq[Double => String](cs,
       v => String.format(java.util.Locale.ROOT, "%.1f", Double.box(v)))
       .map(line).find(_.length <= 1900)
-      .getOrElse(s"""{"metric":"total","value":${ms(total)},"unit":"sec","anchor":${cs(anchor)}$a2Field,"queries":{},"sf":"$sfDir"}""")
+      .getOrElse(s"""{"metric":"total","value":${ms(total)},"unit":"sec","anchor":${cs(anchor)}$fields,"queries":{},"sf":"$sfDir"}""")
     println(out)
     spark.stop()
   }

@@ -78,7 +78,23 @@ object GraftSession {
     configure(spark)
   }
 
-  def defaultCpus: Int =
-    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
+  /** `SPARK_GRAFT_CPUS`: the core count of a local master and its
+    * shuffle partitions; the processor count when unset or blank. */
+  def defaultCpus: Int = cpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  private[graft] def cpus(raw: Option[String]): Int =
+    envKnob("SPARK_GRAFT_CPUS", raw, Runtime.getRuntime.availableProcessors(),
+      1, Int.MaxValue).toInt
+
+  /** The value of the integer env knob `name`: `default` when unset or
+    * blank, an IllegalArgumentException naming the knob when it is not
+    * an integer in [min, max]. */
+  private[graft] def envKnob(name: String, raw: Option[String], default: Long,
+                             min: Long, max: Long): Long =
+    raw.map(_.trim).filter(_.nonEmpty) match {
+      case None => default
+      case Some(v) => v.toLongOption.filter(x => x >= min && x <= max).getOrElse(
+        throw new IllegalArgumentException(
+          s"$name must be an integer in [$min, $max], got '$v'"))
+    }
 }

@@ -3096,39 +3096,47 @@ object Multimodal extends graft.QueryModule {
     // stays labeled; the assembled rows keep the fixed seq order, so
     // the output is byte-identical to the sequential spelling.
     // Measured (sf0.1, min-of-2 noop): 2.8 s sequential -> ~1.6 s.
-    // Each arm runs under its own job group: if one arm fails, the
-    // other two are CANCELLED (not left running detached) before the
-    // failure propagates — Await on a failed Future.sequence would
-    // otherwise return immediately while orphan jobs keep the
-    // executors busy (round-13 advice item).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val arms = Seq[(String, () => DataFrame)](
-      ("image", () => imageDedupGroups(nearDupImageTable(documents))),
-      ("audio", () => audioDedupGroups(nearDupAudioTable(documents))),
-      ("video", () => videoDedupGroups(nearDupVideoTable(documents))))
-    val rows =
-      try {
-        val futures = arms.map { case (kind, mk) =>
-          scala.concurrent.Future {
-            spark.sparkContext.setJobGroup(s"q143-$kind",
-              s"q143 funnel: $kind groups", interruptOnCancel = true)
-            try row(kind, mk())
-            finally spark.sparkContext.clearJobGroup()
-          }
-        }
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futures)
-            .recoverWith { case e =>
-              arms.foreach { case (kind, _) =>
-                spark.sparkContext.cancelJobGroup(s"q143-$kind") }
-              scala.concurrent.Future.failed(e)
-            }(scala.concurrent.ExecutionContext.global),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
+    val rows = concurrentArms(spark, "q143", Seq[(String, () => (String, Long, Long, Long))](
+      ("image", () => row("image", imageDedupGroups(nearDupImageTable(documents)))),
+      ("audio", () => row("audio", audioDedupGroups(nearDupAudioTable(documents)))),
+      ("video", () => row("video", videoDedupGroups(nearDupVideoTable(documents))))))
     rows.toDF("kind", "n_total", "n_dropped", "n_kept")
       .withColumn("permille_kept", expr("n_kept * 1000 div n_total"))
+  }
+
+  /** Runs `arms` on a pool of their own, each under its own job group,
+    * and returns their results in order. If one arm fails, the other
+    * arms are CANCELLED (not left running detached) before the failure
+    * propagates — Await on a failed Future.sequence would otherwise
+    * return immediately while orphan jobs keep the executors busy
+    * (round-13 advice item). The cancel covers the groups' future jobs
+    * too, so an arm between two actions cannot submit its next job
+    * after it; each call's group ids are unique, so a later call never
+    * inherits an earlier call's cancel. */
+  private[graft] def concurrentArms[T](spark: SparkSession, label: String,
+                                       arms: Seq[(String, () => T)]): Seq[T] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(arms.size)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    val groups = arms.map { case (kind, _) =>
+      s"$label-$kind-${java.util.UUID.randomUUID()}" }
+    try {
+      val futures = arms.zip(groups).map { case ((kind, run), group) =>
+        scala.concurrent.Future {
+          spark.sparkContext.setJobGroup(group, s"$label: $kind",
+            interruptOnCancel = true)
+          try run()
+          finally spark.sparkContext.clearJobGroup()
+        }
+      }
+      scala.concurrent.Await.result(
+        scala.concurrent.Future.sequence(futures)
+          .recoverWith { case e =>
+            groups.foreach(spark.sparkContext.cancelJobGroupAndFutureJobs)
+            scala.concurrent.Future.failed(e)
+          }(scala.concurrent.ExecutionContext.global),
+        scala.concurrent.duration.Duration.Inf)
+    } finally pool.shutdown()
   }
 
   def mediaCurationFunnelQuery(s: SparkSession, d: String): DataFrame =

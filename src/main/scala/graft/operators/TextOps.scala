@@ -1231,8 +1231,15 @@ object TextOps extends graft.QueryModule {
     * → ~100 MB at the cap, and the mis-pick penalty is bounded (the
     * distributed loop still works below the cap, just ~1 s slower at
     * bench scale). Env-overridable for cluster tuning. */
-  private val MaxDriverVocab =
-    sys.env.getOrElse("SPARK_GRAFT_MAX_DRIVER_VOCAB", "1000000").toLong
+  private def MaxDriverVocab: Long =
+    maxDriverVocab(sys.env.get("SPARK_GRAFT_MAX_DRIVER_VOCAB"))
+
+  /** `SPARK_GRAFT_MAX_DRIVER_VOCAB`, parsed where a BPE call uses it,
+    * so a bad value fails that call with the knob's name rather than
+    * every TextOps call. 0 keeps the rounds distributed. */
+  private[graft] def maxDriverVocab(raw: Option[String]): Long =
+    graft.core.GraftSession.envKnob("SPARK_GRAFT_MAX_DRIVER_VOCAB", raw,
+      1000000L, 0L, Long.MaxValue)
 
   /** The [[bpeTrain]] driver loop; also returns the final piece table
     * (word, ps, freq) so [[bpeEncode]] can apply the learned merges.

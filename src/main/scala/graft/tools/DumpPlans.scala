@@ -19,10 +19,9 @@ object DumpPlans {
     val sf = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
     val only = args.drop(3).toSet
     Files.createDirectories(Paths.get(outDir))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = graft.core.GraftSession.defaultCpus
     val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)

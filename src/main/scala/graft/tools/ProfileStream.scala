@@ -39,10 +39,9 @@ object ProfileStream {
   def main(args: Array[String]): Unit = {
     val rocksdb = args.contains("--rocksdb")
     val only = args.filterNot(_.startsWith("--")).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = graft.core.GraftSession.defaultCpus
     val b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.ui.enabled", "false")
     if (rocksdb)
       b.config("spark.sql.streaming.stateStore.providerClass",

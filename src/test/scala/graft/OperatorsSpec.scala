@@ -2466,4 +2466,33 @@ class OperatorsSpec extends SparkSpec {
       assert(d > 0, s"$kind dedup dropped nothing — funnel vacuous")
     }
   }
+
+  test("concurrentArms: a failed arm cancels its siblings' later jobs too") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import scala.concurrent.{Await, Promise}
+    import scala.concurrent.duration._
+    val firstDone, failed = new CountDownLatch(1)
+    val nextJob = Promise[Long]()
+    val arms = Seq[(String, () => Long)](
+      ("sibling", () => {
+        val first = spark.range(10).count()
+        firstDone.countDown()
+        failed.await(60, TimeUnit.SECONDS)
+        nextJob.complete(scala.util.Try(spark.range(10).count()))
+        first
+      }),
+      ("broken", () => {
+        firstDone.await(60, TimeUnit.SECONDS)
+        throw new IllegalStateException("arm failed")
+      }))
+    intercept[IllegalStateException](Multimodal.concurrentArms(spark, "spec", arms))
+    failed.countDown()
+    // the sibling submits its next job only after the cancel: refused
+    val refused = intercept[org.apache.spark.SparkException](
+      Await.result(nextJob.future, 60.seconds))
+    assert(refused.getMessage.contains("cancel"), refused.getMessage)
+    // the cancel stays with that call's groups
+    assert(Multimodal.concurrentArms(spark, "spec",
+      Seq[(String, () => Long)](("ok", () => spark.range(5).count()))) == Seq(5L))
+  }
 }
